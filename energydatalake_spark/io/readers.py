@@ -18,6 +18,7 @@ tiny jobs. Here:
 from __future__ import annotations
 
 import contextlib
+import csv
 import glob
 import os
 
@@ -62,14 +63,47 @@ def read_csv_folder(
 
     With ``schema=None`` all columns arrive as strings, matching the
     reference's read exactly (header-driven, no inferSchema); production
-    callers pass the explicit schema from ``schemas.py``.
+    callers pass the explicit schema from ``schemas.py``. The header
+    names are read on the driver from the first ``.csv`` by sorted name
+    (``_csv_header``) instead of by a Spark header-inference job, and
+    passed as an all-string schema with ``enforceSchema=false`` — so
+    Spark checks every file's header against them and a folder whose
+    files order or name their columns differently fails the read
+    instead of binding by position. Empty header names raise here;
+    duplicate ones fail Spark's analysis.
     """
     if not folder_has_files(path, ".csv"):
         return None
     reader = spark.read.option("header", str(header).lower())
+    if schema is None and header:
+        names = _csv_header(path)
+        if names is not None:
+            schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+            reader = reader.option("enforceSchema", "false")
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)
+
+
+def _csv_header(path: str) -> list[str] | None:
+    """Column names on the first non-blank line of the first ``.csv``
+    (by sorted name) under ``path`` that has one; None when every file
+    is blank. Quoted names (spaces, commas) parse as Spark's header
+    inference parses them, and a leading BOM is dropped as Spark drops
+    it."""
+    for name in sorted(os.listdir(path)):
+        if not name.endswith(".csv") or name.startswith(("_", ".")):
+            continue
+        with open(os.path.join(path, name), newline="", encoding="utf-8-sig") as f:
+            for row in csv.reader(f):
+                if row and (len(row) > 1 or row[0].strip()):
+                    if not all(row):
+                        raise ValueError(
+                            f"read_csv_folder: empty column name in the "
+                            f"header of {os.path.join(path, name)}: {row}"
+                        )
+                    return row
+    return None
 
 
 def read_jsonl_folder(

@@ -26,7 +26,6 @@ pre-ANSI cast semantics.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
     FloatType,
@@ -191,19 +190,29 @@ def validate_columns(df: DataFrame, source: str) -> StructType:
     return schema
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def apply_schema(df: DataFrame, source: str) -> DataFrame:
     """Validate column names, then impose the declared types and column
     order. ``try_``-casts: unparseable → null (P3 semantics; the
     pipelines' drop-null stage then removes the row, matching the
-    reference's unparseable→null→dropped flow)."""
+    reference's unparseable→null→dropped flow). The projection is one
+    ``selectExpr`` — one parse on the JVM instead of several py4j
+    ``Column`` calls per column."""
     schema = validate_columns(df, source)
     fmt = SOURCE_TS_FMT.get(source)
-    cols = []
+    fmt_arg = "" if fmt is None else f", '{fmt}'"
+    exprs = []
     for field in schema.fields:
-        c = F.col(field.name)
+        c = quote_ident(field.name)
         if isinstance(field.dataType, TimestampType):
-            c = F.try_to_timestamp(c, F.lit(fmt)) if fmt else F.try_to_timestamp(c)
-        elif not isinstance(field.dataType, StringType):
-            c = c.try_cast(field.dataType)
-        cols.append(c.alias(field.name))
-    return df.select(*cols)
+            e = f"try_to_timestamp({c}{fmt_arg})"
+        elif isinstance(field.dataType, StringType):
+            e = c
+        else:
+            e = f"try_cast({c} AS {field.dataType.simpleString()})"
+        exprs.append(f"{e} AS {c}")
+    return df.selectExpr(*exprs)

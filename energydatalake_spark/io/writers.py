@@ -5,9 +5,10 @@ The reference appends to BigQuery via a staging bucket
 and overwrites one table (``mergeHistoricalWeather.py:100-105``). The
 contractual sink here is partitioned Parquet under a warehouse dir:
 ``upsert_table`` implements the insert-only-MERGE exactly-once
-contract directly on Parquet (batch dedup + null-safe anti-join +
-dynamic partition pruning), so the semantics do not depend on a table
-format's transaction log. On a Delta/Iceberg deployment the same
+contract directly on Parquet (batch dedup + null-safe anti-join
+against a read-back of only the ``dt`` partition directories the
+batch touches), so the semantics do not depend on a table format's
+transaction log. On a Delta/Iceberg deployment the same
 call-site maps 1:1 onto ``MERGE ... WHEN NOT MATCHED INSERT`` — a
 format swap, not a semantics change.
 
@@ -18,10 +19,12 @@ analytics queries prune to the touched dates instead of scanning 100 TB.
 
 from __future__ import annotations
 
+import os
 from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def append_table(
@@ -60,78 +63,85 @@ def upsert_table(
       a null-key row inserts exactly once instead of on every rerun.
 
     Scale shape: the read-back is restricted to the ``dt`` partitions
-    the batch touches via a broadcast semi-join on the batch's distinct
-    dates — dynamic partition pruning keys the scan off that frame, so
-    nothing rides the driver (at 100 TB × years of partitions a driver
-    ``collect``+``isin`` list would not). Single-writer semantics,
-    matching the reference's Scheduler-serialized jobs.
+    the batch touches. Their distinct values are batch-sized, so they
+    are collected and mapped to directory paths on the driver (null →
+    ``dt=__HIVE_DEFAULT_PARTITION__``, pre-1900 dates are ordinary
+    directories); only the key columns of the directories that exist
+    are read, with the batch's own types as the read schema. That
+    costs no schema-inference job, never lists the files of untouched
+    partitions, and a batch on new dates appends with no read-back at
+    all. Single-writer semantics, matching the reference's
+    Scheduler-serialized jobs.
     """
-    import os
-
-    spark = df.sparkSession
     if partition_date_col is not None:
         df = df.withColumn("dt", F.to_date(F.col(partition_date_col)))
     # once-per-row within the batch itself (keep-any on key ties)
     df = df.dropDuplicates(keys)
-    exists = os.path.isdir(path) and any(
-        not n.startswith((".", "_")) for n in os.listdir(path)
-    )
-    if not exists:
-        writer = df.write.format("parquet").mode("append")
-        if partition_date_col is not None:
-            writer = writer.partitionBy("dt")
-        writer.save(path)
+    if not _has_data(path):
+        _append(df, path, partition_date_col)
         return
-    # The merge plan consumes the batch twice (partition-pruning side +
-    # anti-join side). Persist it — bounded by BATCH size, not table
-    # size — so the upstream source computes once; this also keeps any
-    # caller-attached df.observe metrics single-counted.
+    # A partitioned merge consumes the batch twice (touched-date
+    # collect + anti-join side). Persist it — bounded by BATCH size,
+    # not table size — so the upstream source computes once; this also
+    # keeps any caller-attached df.observe metrics single-counted.
     df = df.persist()
     try:
-        existing = spark.read.parquet(path)
-        if partition_date_col is not None:
-            existing = _pruned_readback(existing, df)
-        fresh = _fresh_rows(df, existing, keys)
-        writer = fresh.write.format("parquet").mode("append")
-        if partition_date_col is not None:
-            writer = writer.partitionBy("dt")
-        writer.save(path)
+        if partition_date_col is None:
+            existing = _readback(df, path, [path], keys)
+        else:
+            dirs = [_partition_dir(path, d) for d in _touched_dts(df)]
+            existing = _readback(df, path, dirs, keys + ["dt"])
+        fresh = df if existing is None else _fresh_rows(df, existing, keys)
+        _append(fresh, path, partition_date_col)
     finally:
         df.unpersist()
 
 
-def _pruned_readback(existing: DataFrame, batch: DataFrame) -> DataFrame:
-    """Restrict the target read-back to the ``dt`` partitions the batch
-    touches, without a driver round-trip: broadcast the batch's
-    distinct dates and semi-join on the partition column — dynamic
-    partition pruning keys the parquet scan off the broadcast result.
+def _has_data(path: str) -> bool:
+    return os.path.isdir(path) and any(
+        not n.startswith((".", "_")) for n in os.listdir(path)
+    )
 
-    The sanity bound on ``dt`` exists for the optimizer, not the data:
-    DPP only fires when the pruning side carries a likely-selective
-    predicate (``isnotnull`` does not qualify), and without DPP this
-    semi-join would scan every partition of the target.
 
-    Rows outside that bound — null ``dt`` (unparseable source
-    timestamp) or pre-1900 dates — would be silently dropped from the
-    read-back by the semi-join, breaking exactly-once for exactly those
-    rows on redelivery. They are unioned back unconditionally: such
-    partitions are pathological by construction (a healthy feed has
-    none), so the extra scan is zero-to-tiny while correctness holds
-    for every partition."""
-    import datetime
+def _append(df: DataFrame, path: str, partition_date_col: str | None) -> None:
+    writer = df.write.format("parquet").mode("append")
+    if partition_date_col is not None:
+        writer = writer.partitionBy("dt")
+    writer.save(path)
 
-    epoch0 = F.lit(datetime.date(1900, 1, 1))
-    batch_dts = batch.select("dt").distinct().filter(F.col("dt") >= epoch0)
-    pruned = existing.join(F.broadcast(batch_dts), "dt", "left_semi")
-    odd = existing.filter(F.col("dt").isNull() | (F.col("dt") < epoch0))
-    return pruned.unionByName(odd)
+
+def _touched_dts(df: DataFrame) -> list:
+    """The batch's distinct ``dt`` values (batch-sized by construction)."""
+    return [r.dt for r in df.select("dt").distinct().collect()]
+
+
+def _partition_dir(path: str, d) -> str:
+    """Directory Spark's partitioned writer uses for ``dt=d``."""
+    name = "__HIVE_DEFAULT_PARTITION__" if d is None else d.isoformat()
+    return os.path.join(path, f"dt={name}")
+
+
+def _readback(
+    df: DataFrame, path: str, dirs: list[str], columns: list[str]
+) -> DataFrame | None:
+    """``columns`` of the target rows under ``dirs`` (those that exist),
+    read with ``df``'s types for them — or None when none exists."""
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return None
+    schema = T.StructType([df.schema[c] for c in columns])
+    return (
+        df.sparkSession.read.schema(schema)
+        .option("basePath", path)
+        .parquet(*dirs)
+    )
 
 
 def _fresh_rows(df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
     """Rows of ``df`` whose key tuple is absent from ``existing`` —
     null-safe, so a null-valued key matches its prior insertion and is
     not re-inserted on every rerun."""
-    target_keys = existing.select(*[F.col(f"`{k}`") for k in keys]).distinct()
+    target_keys = existing.select(*[F.col(f"`{k}`") for k in keys])
     cond = reduce(
         lambda a, b: a & b,
         [df[f"`{k}`"].eqNullSafe(target_keys[f"`{k}`"]) for k in keys],
@@ -184,8 +194,9 @@ def apply_cdc_batch(
     two same-key rows with EQUAL seq have no defined winner.
 
     Plain parquet has no row-level update, so the rewrite unit is the
-    PARTITION: only ``dt`` partitions the batch touches are read back,
-    merged, and atomically swapped via dynamic partition overwrite
+    PARTITION: only ``dt`` partitions the batch touches are read back
+    (by directory path, with the batch's types as the read schema, as
+    in ``upsert_table``), merged, and atomically swapped via dynamic partition overwrite
     (``partitionOverwriteMode=dynamic`` — untouched partitions are
     not listed, read, or rewritten; at 100 TB × years that is the
     difference between a merge and a table rewrite). Requires the
@@ -197,8 +208,6 @@ def apply_cdc_batch(
 
     Single-writer, like every sink here (Scheduler-serialized jobs).
     """
-    import os
-
     from energydatalake_spark.operators.clean import dedup_latest
 
     spark = df.sparkSession
@@ -227,20 +236,20 @@ def apply_cdc_batch(
     df = df.persist()  # batch-sized; feeds partition list, anti-join, union
     try:
         survivors = df.filter(F.col(op_col) != F.lit("D")).drop(op_col)
-        exists = os.path.isdir(path) and any(
-            not n.startswith((".", "_")) for n in os.listdir(path)
-        )
-        if not exists:
-            writer = survivors.write.format("parquet").mode("append")
-            if partition_date_col is not None:
-                writer = writer.partitionBy("dt")
-            writer.save(path)
+        if not _has_data(path):
+            _append(survivors, path, partition_date_col)
             return
-        existing = spark.read.parquet(path)
-        if partition_date_col is not None:
-            # only the touched partitions ride the merge (null/pre-1900
-            # dt rows are unioned back by the same guard as upsert_table)
-            existing = _pruned_readback(existing, df)
+        if partition_date_col is None:
+            existing = _readback(df, path, [path], survivors.columns)
+        else:
+            # only the touched partitions ride the merge
+            touched = set(_touched_dts(df))
+            dirs = [_partition_dir(path, d) for d in touched]
+            existing = _readback(df, path, dirs, survivors.columns)
+        if existing is None:
+            # no touched partition exists yet: nothing to replace or delete
+            _append(survivors, path, partition_date_col)
+            return
         batch_keys = df.select(*[F.col(f"`{k}`") for k in keys]).distinct()
         anti_cond = reduce(
             lambda a, b: a & b,
@@ -249,7 +258,7 @@ def apply_cdc_batch(
         # null-safe, same as _fresh_rows: a delete for a null key must
         # match the null-key row it targets
         kept = existing.join(batch_keys, anti_cond, "left_anti")
-        merged = kept.unionByName(survivors.select(*kept.columns))
+        merged = kept.unionByName(survivors)
         # The merge READS the path it overwrites — materialize before
         # the write (touched-partitions-sized, not table-sized; the
         # unpartitioned degenerate case is table-sized, as documented).
@@ -268,29 +277,18 @@ def apply_cdc_batch(
         if partition_date_col is not None:
             # Dynamic overwrite cannot write an EMPTY partition: a dt
             # whose every row was deleted is absent from `merged` and
-            # its stale directory would survive. The touched-dt list is
-            # batch-sized by construction — remove the emptied ones.
-            # Null dt participates too (ADVICE r7): its rows live under
-            # dt=__HIVE_DEFAULT_PARTITION__, which _pruned_readback
-            # deliberately carries for exactly-once — so a delete batch
+            # its stale directory would survive — remove the emptied
+            # ones. Null dt participates too (ADVICE r7): its rows live
+            # under dt=__HIVE_DEFAULT_PARTITION__, so a delete batch
             # that empties it must also remove the directory, or the
             # pre-delete images resurrect.
             import shutil
 
-            touched = {r.dt for r in df.select("dt").distinct().collect()}
             remaining = {
                 r.dt for r in merged.select("dt").distinct().collect()
             }
-            emptied = touched - remaining
-            for d in sorted(
-                emptied, key=lambda d: "" if d is None else d.isoformat()
-            ):
-                part_name = (
-                    "dt=__HIVE_DEFAULT_PARTITION__"
-                    if d is None
-                    else f"dt={d.isoformat()}"
-                )
-                part_dir = os.path.join(path, part_name)
+            for d in touched - remaining:
+                part_dir = _partition_dir(path, d)
                 if os.path.isdir(part_dir):
                     shutil.rmtree(part_dir)
     finally:

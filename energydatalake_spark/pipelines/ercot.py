@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from energydatalake_spark.io.archive import archive_folder
 from energydatalake_spark.io.readers import read_csv_folder
-from energydatalake_spark.io.schemas import OFFSET_TS_FMT, apply_schema
+from energydatalake_spark.io.schemas import OFFSET_TS_FMT, apply_schema, quote_ident
 from energydatalake_spark.io.writers import overwrite_table, upsert_table, write_csv
 from energydatalake_spark.operators.asof import asof_join
 from energydatalake_spark.operators.band import band_join
@@ -58,12 +58,16 @@ def _observed(df: DataFrame) -> tuple[DataFrame, "Observation"]:
     """Attach row-count + per-column null-count metrics via
     ``df.observe`` — the reference re-scans its source once per metric
     (count latest:44, null profile latest:52, SURVEY.md §4 caching row);
-    observed metrics ride along the ONE sink-write action for free."""
+    observed metrics ride along the ONE sink-write action for free.
+    Each metric is one parsed ``F.expr`` (one py4j call per column)."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    metrics = [F.count(F.lit(1)).alias("rows")] + [
-        F.sum(F.col(c).isNull().cast("int")).alias(f"null__{c}") for c in df.columns
+    metrics = [F.expr("count(1) AS `rows`")] + [
+        F.expr(
+            f"sum(cast({quote_ident(c)} IS NULL AS INT)) AS {quote_ident('null__' + c)}"
+        )
+        for c in df.columns
     ]
     return df.observe(obs, *metrics), obs
 

@@ -16,6 +16,10 @@ centralized and tuned for the Catalyst/Tungsten execution model:
 - ``spark.sql.shuffle.partitions`` sized from the available cores for
   local runs; a real cluster would size it from executor count × cores
   (AQE coalescing makes over-provisioning cheap).
+- The package's parent directory goes on the Python workers'
+  ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so pandas-UDF
+  closures (``mapInPandas``/``applyInPandas``) can import the package
+  whatever the driver's working directory or environment.
 """
 
 from __future__ import annotations
@@ -24,6 +28,9 @@ import os
 import re
 
 from pyspark.sql import SparkSession
+
+#: Directory holding the ``energydatalake_spark`` package.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -85,12 +92,20 @@ def get_spark(
 
     ``master`` defaults to ``local[N]`` with N from ``SPARK_GRAFT_CPUS``
     (falls back to all cores). On a real cluster, pass ``master=None``
-    with ``MASTER`` set by the submitter and this is a no-op.
+    with ``MASTER`` set by the submitter and this is a no-op. A
+    ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` is kept, after
+    the package's parent directory.
     """
     cores = default_parallelism()
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     n_shuffle = shuffle_partitions if shuffle_partitions is not None else cores
+    extra_conf = dict(extra_conf or {})
+    worker_path = os.pathsep.join(
+        p
+        for p in (_PACKAGE_PARENT, extra_conf.pop("spark.executorEnv.PYTHONPATH", ""))
+        if p
+    )
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
     builder = (
@@ -126,8 +141,9 @@ def get_spark(
         # a fact-side scan pruned by a dimension filter is the
         # difference between reading a partition and reading a table).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -151,34 +151,68 @@ def test_forecast_vs_actual_no_cartesian(spark):
     assert "partial" in plan
 
 
-def test_upsert_readback_prunes_partitions(spark, tmp_path):
-    # The parquet MERGE must read back ONLY the dt partitions the batch
-    # touches, and must do it WITHOUT a driver collect: the pruned
-    # read-back is a broadcast semi-join whose scan carries a
-    # dynamicpruning PartitionFilters entry keyed off the batch's
-    # distinct dates. A re-run over one day never scans table history.
+def test_upsert_readback_reads_only_touched_partitions(spark, tmp_path, monkeypatch):
+    # The parquet MERGE reads back ONLY the dt directories the batch
+    # touches: every file of the read-back lies under the touched
+    # dt= directory, so a re-run over one day never lists or scans
+    # table history. A batch on new dates runs no read-back at all.
     import pyspark.sql.functions as F
 
-    from energydatalake_spark.io.writers import (
-        _fresh_rows,
-        _pruned_readback,
-        upsert_table,
-    )
+    from energydatalake_spark.io import writers
 
     df = spark.createDataFrame(
         [(i, f"2024-03-0{1 + i % 3} 00:00:00", float(i)) for i in range(9)],
         "k bigint, t string, v double",
     ).withColumn("t", F.to_timestamp("t"))
     path = str(tmp_path / "tbl")
-    upsert_table(df, path, keys=["k"], partition_date_col="t")
-    batch = spark.createDataFrame(
-        [(100, "2024-03-01 05:00:00", 1.0)], "k bigint, t string, v double"
-    ).withColumn("t", F.to_timestamp("t")).withColumn("dt", F.to_date("t"))
-    pruned = _pruned_readback(spark.read.parquet(path), batch)
-    plan = plan_str(pruned)
-    assert "dynamicpruning" in plan  # DPP, not a collect-backed isin
-    fresh = _fresh_rows(batch, pruned, ["k"])
+    writers.upsert_table(df, path, keys=["k"], partition_date_col="t")
+
+    def batch(k, ts):
+        return spark.createDataFrame(
+            [(k, ts, 1.0)], "k bigint, t string, v double"
+        ).withColumn("t", F.to_timestamp("t")).withColumn("dt", F.to_date("t"))
+
+    old_day = batch(100, "2024-03-01 05:00:00")
+    dirs = [writers._partition_dir(path, d) for d in writers._touched_dts(old_day)]
+    back = writers._readback(old_day, path, dirs, ["k", "dt"])
+    files = back.inputFiles()
+    assert files and all("/dt=2024-03-01/" in f for f in files), files
+    fresh = writers._fresh_rows(old_day, back, ["k"])
     assert [r.k for r in fresh.collect()] == [100]
+
+    def no_readback(*a, **kw):
+        raise AssertionError("a batch on new dates must not read the sink back")
+
+    monkeypatch.setattr(writers, "_fresh_rows", no_readback)
+    new_day = batch(200, "2024-04-01 05:00:00").drop("dt")
+    writers.upsert_table(new_day, path, keys=["k"], partition_date_col="t")
+    assert spark.read.parquet(path).count() == 10
+
+
+def test_load_latest_warm_batch_job_count(spark, tmp_path):
+    # One warm load_latest run over an existing sink: CSV header read on
+    # the driver (no inference job), touched-partition read-back with
+    # the batch's schema (no parquet schema-inference job). 11 jobs
+    # before those changes, in this session.
+    import glob
+    import shutil
+
+    from energydatalake_spark.pipelines import ercot
+    from energydatalake_spark.pipelines.fixtures import generate_all
+
+    layout = generate_all(str(tmp_path / "src"))
+    cfg = ercot.PipelineConfig(
+        source_dir=layout["load_latest"],
+        sink_path=str(tmp_path / "sink"),
+        archive_dir=str(tmp_path / "archive"),
+    )
+    assert ercot.load_latest(spark, cfg)["rows"] > 0  # creates the sink
+    for f in glob.glob(str(tmp_path / "archive" / "*.csv*")):
+        shutil.copy(f, cfg.source_dir)  # redelivery: same dates, same keys
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
+    assert ercot.load_latest(spark, cfg)["rows"] > 0
+    assert int(dag.nextJobId()) - before == 7
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

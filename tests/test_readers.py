@@ -585,3 +585,81 @@ def test_read_table_int96_timestamps(spark, tmp_path):
     assert dict(df.dtypes)["ts"] == "timestamp"
     got = {r.event_id: r.ts for r in df.collect()}
     assert got[1].hour == 10 and got[2].minute == 30
+
+
+def _csv_dir(tmp_path, name, files):
+    d = tmp_path / name
+    d.mkdir()
+    for fname, text in files.items():
+        (d / fname).write_text(text)
+    return str(d)
+
+
+def test_csv_header_matches_spark_inference(spark, tmp_path):
+    """read_csv_folder reads header names on the driver instead of by a
+    Spark inference job; they must be the names Spark would infer."""
+    from energydatalake_spark.io.readers import _csv_header
+    from energydatalake_spark.pipelines.fixtures import generate_all
+
+    folders = list(generate_all(str(tmp_path / "src")).values())
+    folders.append(
+        _csv_dir(
+            tmp_path,
+            "quoted",
+            {"a.csv": '"Interval Start","Load, MW",time\n1,2,2024-01-01\n'},
+        )
+    )
+    for d in folders:
+        inferred = spark.read.option("header", "true").csv(d).columns
+        assert _csv_header(d) == inferred, d
+    assert _csv_header(folders[-1]) == ["Interval Start", "Load, MW", "time"]
+
+
+def test_read_csv_folder_rejects_mixed_column_order(spark, tmp_path):
+    """Files naming their columns in different orders must fail the
+    read, not bind by position (which would put a load value in the
+    time column and let drop_nulls silently discard the row)."""
+    import pytest
+
+    from energydatalake_spark.io.readers import read_csv_folder
+
+    d = _csv_dir(
+        tmp_path,
+        "mixed",
+        {
+            "a.csv": "Time,Load\n2024-01-01 00:00:00,1\n",
+            "b.csv": "Load,Time\n2,2024-01-01 01:00:00\n",
+        },
+    )
+    with pytest.raises(Exception, match="CSV header does not conform"):
+        read_csv_folder(spark, d).collect()
+
+
+def test_read_csv_folder_one_column_order_reads_as_inferred(spark, tmp_path):
+    from energydatalake_spark.io.readers import read_csv_folder
+
+    d = _csv_dir(
+        tmp_path,
+        "same",
+        {
+            "a.csv": "Time,Load\n2024-01-01 00:00:00,1\n2024-01-01 00:05:00,\n",
+            "b.csv": 'Time,Load\n2024-01-01 01:00:00,"2"\n',
+        },
+    )
+    got = read_csv_folder(spark, d)
+    want = spark.read.option("header", "true").csv(d)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_read_csv_folder_rejects_empty_and_duplicate_names(spark, tmp_path):
+    import pytest
+
+    from energydatalake_spark.io.readers import read_csv_folder
+
+    empty = _csv_dir(tmp_path, "empty", {"a.csv": "a,,b\n1,2,3\n"})
+    with pytest.raises(ValueError, match="empty column name"):
+        read_csv_folder(spark, empty)
+    dup = _csv_dir(tmp_path, "dup", {"a.csv": "x,x\n1,2\n"})
+    with pytest.raises(Exception, match="COLUMN_ALREADY_EXISTS"):
+        read_csv_folder(spark, dup).collect()

@@ -454,3 +454,24 @@ def test_probe_joins_generators(tmp_path, monkeypatch):
     monkeypatch.setattr(pj, "_GEN_VERSION", pj._GEN_VERSION + 1)
     pj.gen_dir(1)
     assert os.path.getmtime(probe_file) != mtime
+
+
+def test_oracle_check_puts_its_own_checkout_first(tmp_path, monkeypatch):
+    """The tools import the engine from the checkout they live in, so a
+    check or benchmark run from a copy of the repository measures that
+    copy, not another checkout."""
+    import importlib.util
+    import shutil
+    from pathlib import Path
+
+    real_root = Path(__file__).resolve().parent.parent
+    copy_root = tmp_path / "checkout"
+    (copy_root / "tools").mkdir(parents=True)
+    shutil.copy(real_root / "tools" / "oracle_check.py", copy_root / "tools")
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    spec = importlib.util.spec_from_file_location(
+        "oracle_check_copy", copy_root / "tools" / "oracle_check.py"
+    )
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
+    assert sys.path[0] == str(copy_root)
+    assert sys.path[0] != str(real_root)

@@ -9,12 +9,11 @@ Usage: python tools/driver_sim.py
 """
 
 import math
+import os
 import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -10,10 +10,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 RED_FLAGS = ("CartesianProduct", "BroadcastNestedLoopJoin")
 
