@@ -192,11 +192,6 @@ def _footer_probe(path: str) -> tuple[list[str], list[str], list[tuple[str, str]
         return [], [], []
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Back-compat shim over :func:`_footer_probe` (nanos columns only)."""
-    return _footer_probe(path)[0]
-
-
 #: (path → canary already emitted) — one diagnostic line per table per
 #: process, so a silent driver-side testdata regeneration shows up as a
 #: loud schema line in bench/correctness stderr instead of scattered

@@ -49,8 +49,8 @@ PAIR_SCHEMA = T.StructType(
 # invocation therefore evicts every PRIOR invocation's frame (safe:
 # persist keeps lineage, so a still-unconsumed older result silently
 # recomputes), and callers can release eagerly via
-# release_quantized_cache() once a result is consumed (bench and the
-# probe tools do).
+# release_quantized_cache() once a result is consumed (bench.py does,
+# through release_caches).
 _QUANTIZED_CACHE: list[DataFrame] = []
 
 
@@ -177,8 +177,6 @@ def embedding_near_dup_lsh(
     seed: int = 42,
     broadcast_vectors: bool = False,
     compact_rerank: bool = False,
-    compact_bits: int = 8,
-    _compact_stats: dict | None = None,
 ) -> DataFrame:
     """Sub-quadratic near-dup: multi-table sign-LSH candidate
     generation + exact JVM-side cosine rerank (``aggregate``/``zip_with``
@@ -324,24 +322,12 @@ def embedding_near_dup_lsh(
         .dropDuplicates(["id_a", "id_b"])
     )
     if compact_rerank and not broadcast_vectors:
-        # Quantized pre-rerank: compact-vector joins carry dim (int8) or
-        # 2·dim (int16) bytes per candidate side instead of dim·8 B of
-        # float64 — the exchange mass that made the co-shuffle rerank
-        # spill. Margin = the analytic worst case of unit-vector
-        # rounding at the chosen width, so the exact recheck below sees
-        # every true pair. The width trades candidate-side bytes
-        # against the near-threshold MARGIN BAND the survivor join must
-        # carry: int8's margin is ~0.084 at dim 64 (wide band on
-        # corpora with cosine mass near the threshold), int16's is
-        # ~0.0007 (survivors ≈ true output).
-        if compact_bits == 8:
-            qscale, qtype = 127.0, "tinyint"
-        elif compact_bits == 16:
-            qscale, qtype = 32767.0, "smallint"
-        else:
-            raise ValueError(
-                f"compact_bits must be 8 or 16, got {compact_bits}"
-            )
+        # Quantized pre-rerank: compact-vector joins carry dim int8
+        # bytes per candidate side instead of dim·8 B of float64 — the
+        # exchange mass that made the co-shuffle rerank spill. The
+        # per-pair margin below bounds the rounding error, so the exact
+        # recheck sees every true pair.
+        qscale = 127.0
 
         # Arrow-batched quantization, NOT a Catalyst transform/aggregate
         # chain: interpreted HOF lambdas cost ~400 evals/row here, and
@@ -402,9 +388,7 @@ def embedding_near_dup_lsh(
                 yield pd.DataFrame(
                     {
                         "id": pdf["id"].values,
-                        "qv": list(
-                            q.astype(np.int8 if compact_bits == 8 else np.int16)
-                        ),
+                        "qv": list(q.astype(np.int8)),
                         "qe": qe,
                     }
                 )
@@ -428,7 +412,7 @@ def embedding_near_dup_lsh(
         release_quantized_cache()
         qbase = (
             base.select("id", "vec", "nm")
-            .mapInPandas(quantize, f"id long, qv array<{qtype}>, qe double")
+            .mapInPandas(quantize, "id long, qv array<tinyint>, qe double")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         _QUANTIZED_CACHE.append(qbase)
@@ -442,8 +426,8 @@ def embedding_near_dup_lsh(
             F.col("qv").alias("qv_b"),
             F.col("qe").alias("qe_b"),
         )
-        # per-element products fit int (≤ 32767²); the dim-length sum
-        # can exceed int32 at 16-bit scale, so accumulate in bigint
+        # per-element products fit int (≤ 127²); the dim-length sum
+        # accumulates in bigint so no dim can overflow it
         qdot = F.aggregate(
             F.zip_with(
                 F.col("qv_a"),
@@ -470,12 +454,6 @@ def embedding_near_dup_lsh(
             - F.col("qe_b")
             - F.col("qe_a") * F.col("qe_b")
         )
-        if _compact_stats is not None:
-            # measurement hook (tools/adjudicate_compact.py): expose
-            # the pre-filter candidate frame so the survivor band
-            # (survivors / true pairs) is countable without
-            # duplicating the margin math outside the operator
-            _compact_stats["candidates"] = cand
         cand = (
             cand.join(qa, "id_a")
             .join(qb, "id_b")
@@ -490,8 +468,6 @@ def embedding_near_dup_lsh(
             )
             .select("id_a", "id_b")
         )
-        if _compact_stats is not None:
-            _compact_stats["survivors"] = cand
     # Exact rerank: fetch vectors for the deduped candidates only
     # (under compact_rerank, only for the quantized-cosine survivors).
     # Both join sides derive from ONE (id, vec, nm) frame — under

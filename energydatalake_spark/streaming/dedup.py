@@ -16,9 +16,9 @@ Two state regimes:
   the original event; anything later than the watermark was already
   dropped by the watermark itself.
 
-State-store sizing, measured (tools/probe_streaming.py, BENCHHEAVY
-``streaming_x100``: 2,400-file / 48M-row backlog, 38.4M distinct
-keys, identical output from both variants):
+State-store sizing, measured (BENCHHEAVY_sf10.json ``streaming_x100``:
+2,400-file / 48M-row backlog, 38.4M distinct keys, identical output
+from both variants):
 
 - unbounded on the default in-heap provider costs ~228 bytes/key
   (retained versions included) — 8.3 GB at 38.4M keys, i.e. half a

@@ -528,8 +528,8 @@ def test_apply_cdc_batch_drops_fully_deleted_partition(spark, tmp_path):
 
 def test_apply_cdc_batch_drops_emptied_null_dt_partition(spark, tmp_path):
     """ADVICE r7 (medium): a delete batch that empties the null-dt
-    partition (dt=__HIVE_DEFAULT_PARTITION__, carried by
-    _pruned_readback for exactly-once) must remove that directory too —
+    partition (dt=__HIVE_DEFAULT_PARTITION__, read back by _readback
+    for exactly-once) must remove that directory too —
     otherwise the pre-delete images resurrect on the next read."""
     import os
 

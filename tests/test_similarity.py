@@ -743,36 +743,6 @@ def test_compact_rerank_ragged_batch_raises(spark):
         ).collect()
 
 
-def test_embedding_near_dup_lsh_compact16_parity(spark):
-    """compact_bits=16: same superset-margin contract at a ~120× tighter
-    margin — output identical to the default rerank."""
-    import numpy as np
-
-    from energydatalake_spark.similarity.neardup import embedding_near_dup_lsh
-
-    rng = np.random.default_rng(31)
-    rows = []
-    for i in range(300):
-        v = rng.normal(size=16)
-        rows.append((i, [float(x) for x in v]))
-        if i % 10 == 0:
-            rows.append((1000 + i, [float(x + 0.01) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    kw = dict(threshold=0.9, n_planes=8, dim=16)
-    plain = {
-        (r.id_a, r.id_b, round(r.cosine, 9))
-        for r in embedding_near_dup_lsh(df, **kw).collect()
-    }
-    c16 = {
-        (r.id_a, r.id_b, round(r.cosine, 9))
-        for r in embedding_near_dup_lsh(
-            df, compact_rerank=True, compact_bits=16, **kw
-        ).collect()
-    }
-    assert plain == c16
-    assert len(c16) >= 25
-
-
 def test_embedding_near_dup_lsh_compact_nan_parity(spark):
     """Self-review r14: a vector with a NaN element gives the exact
     rerank a NaN cosine, which Spark compares ABOVE every number — the

@@ -84,13 +84,15 @@ def test_file_queue_archive(spark, tmp_path):
 
 
 def test_hourly_rollup_matches_batch(spark):
-    from energydatalake_spark.io.readers import read_table_stream
+    from energydatalake_spark.io.readers import _scoped_conf, read_table_stream
 
     raw = read_table(spark, SF_SMOKE, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = read_table_stream(spark, SF_SMOKE, "events")
-    roll = hourly_rollup(stream, "ts", "value", keys=["event_type"])
-    got = run_stream_to_memory(spark, roll, "t_roll", "complete")
+    # Scoped, not set: the session is shared, and a leaked
+    # nanosAsLong=true changes how later tests read nanos parquet.
+    with _scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+        stream = read_table_stream(spark, SF_SMOKE, "events")
+        roll = hourly_rollup(stream, "ts", "value", keys=["event_type"])
+        got = run_stream_to_memory(spark, roll, "t_roll", "complete")
     batch = (
         raw.groupBy(
             F.date_trunc("hour", "ts").alias("hour_start"), F.col("event_type")

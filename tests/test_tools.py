@@ -7,12 +7,14 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 MULT = 2
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +23,7 @@ def gen_dir(tmp_path_factory):
     subprocess.run(
         [sys.executable, "tools/gen_sf.py", out, str(MULT)],
         check=True,
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
     )
     return out
@@ -103,6 +105,41 @@ def test_gen_sf_events_user_fk(gen_dir):
     )
 
 
+def _content_digest(path):
+    """sha256 over every column's name and values, so the pin survives
+    a pyarrow upgrade that changes only the parquet footer."""
+    import hashlib
+
+    tab = pq.read_table(path)
+    h = hashlib.sha256()
+    for name in tab.column_names:
+        h.update(name.encode())
+        h.update(repr(tab[name].to_pylist()).encode())
+    return h.hexdigest()
+
+
+def test_gen_sf_corpus_tables_pinned(gen_dir):
+    """documents / embeddings are synthesized, not replicated: 5,000
+    docs and 2,000 unit-norm 64-dim vectors per multiplier step, with
+    content pinned to the seeded generators' output."""
+    import numpy as np
+
+    docs = pq.read_table(f"{gen_dir}/documents.parquet")
+    assert docs.num_rows == 5_000 * MULT
+    assert docs["doc_id"].to_pylist() == list(range(5_000 * MULT))
+    emb = pq.read_table(f"{gen_dir}/embeddings.parquet")
+    assert emb.num_rows == 2_000 * MULT
+    m = np.asarray(emb["embedding"].to_pylist(), dtype=np.float64)
+    assert m.shape == (2_000 * MULT, 64)
+    assert np.allclose(np.linalg.norm(m, axis=1), 1.0, atol=1e-6)
+    assert _content_digest(f"{gen_dir}/documents.parquet") == (
+        "c5843a674aeccaba2d0605b60b21c02c00bdf473c91c1ce57c750cc7d230a762"
+    )
+    assert _content_digest(f"{gen_dir}/embeddings.parquet") == (
+        "74ddf3d63adf20cc0cf8bea00b436035440cd65af12fe74447c44865c0607c92"
+    )
+
+
 @pytest.fixture(scope="module")
 def skew_dir(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("gensf") / "skew")
@@ -112,7 +149,7 @@ def skew_dir(tmp_path_factory):
     subprocess.run(
         [sys.executable, "tools/gen_sf.py", "--skew", out],
         check=True,
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
     )
     return out
@@ -121,7 +158,7 @@ def skew_dir(tmp_path_factory):
 def test_gen_sf_rejects_flag_like_out_dir():
     r = subprocess.run(
         [sys.executable, "tools/gen_sf.py", "--bogus"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
     )
@@ -134,7 +171,7 @@ def test_gen_sf_rejects_flag_like_out_dir():
                   ["--skew", "/tmp/x", "5"], ["/tmp/x", "5", "6"]):
         r = subprocess.run(
             [sys.executable, "tools/gen_sf.py", *extra],
-            cwd="/root/repo",
+            cwd=REPO,
             capture_output=True,
             text=True,
         )
@@ -199,38 +236,6 @@ def test_gen_sf_skew_fk_closure_and_other_columns_untouched(skew_dir):
         t1 = pq.read_table(f"{skew_dir}/{t}.parquet")
         t0 = pq.read_table(f"{src}/{t}.parquet")
         assert t1.equals(t0), t
-
-
-def test_scale_probe_manifest_gates_reuse(tmp_path):
-    """_gen_dir only reuses an existing probe dir when its manifest
-    matches the current generator identity (sizes + seed + source
-    hash); a stale or missing manifest forces regeneration (r10
-    ADVICE: stale /tmp data silently fed BENCHHEAVY exponents)."""
-    import json
-    import os
-
-    from tools.scale_probe import _gen_dir, _gen_manifest
-
-    base = str(tmp_path)
-    d = _gen_dir(base, 1)
-    mpath = os.path.join(d, "manifest.json")
-    assert json.load(open(mpath)) == _gen_manifest(1)
-    stamp = os.path.getmtime(os.path.join(d, "documents.parquet"))
-
-    # Matching manifest -> reused, parquet untouched.
-    assert _gen_dir(base, 1) == d
-    assert os.path.getmtime(os.path.join(d, "documents.parquet")) == stamp
-
-    # Tampered manifest (e.g. generator changed since) -> regenerated.
-    bad = dict(_gen_manifest(1), generator_md5="stale")
-    json.dump(bad, open(mpath, "w"))
-    _gen_dir(base, 1)
-    assert json.load(open(mpath)) == _gen_manifest(1)
-
-    # Parquet present but no manifest at all -> regenerated with one.
-    os.remove(mpath)
-    _gen_dir(base, 1)
-    assert os.path.exists(mpath)
 
 
 # ---------------------------------------------------------------- bench.py
@@ -304,174 +309,20 @@ def test_bench_blob_gate_rejects_edited_measurement(git_repo):
     assert not bench._artifact_matches_committed_blob(str(art), str(repo))
 
 
-# ------------------------------------------------- streaming/maintenance gen
-# The scale probes' backlog/warehouse generators are numpy-only; their
-# structural invariants (row counts, dup rate, manifest-gated reuse,
-# pristine-root gate) are pinned here at toy scale without a Spark
-# session.
-
-
-def test_probe_streaming_backlog_gen(tmp_path, monkeypatch):
-    import collections
-    import json
-    import os
-
-    import tools.probe_streaming as ps
-
-    monkeypatch.setattr(ps, "BASE", str(tmp_path))
-    monkeypatch.setattr(ps, "BACKLOG", str(tmp_path / "backlog"))
-    monkeypatch.setattr(ps, "N_FILES", 8)
-    monkeypatch.setattr(ps, "ROWS_PER_FILE", 1500)
-    m = ps.gen_backlog()
-    assert m["n_rows"] == 8 * 1500
-    files = sorted(os.listdir(tmp_path / "backlog"))
-    assert len(files) == 8 and files == sorted(files)
-    keys = []
-    ts_max_prev = None
-    for f in files:
-        t = pq.read_table(tmp_path / "backlog" / f)
-        keys += t.column("k").to_pylist()
-        lo = min(t.column("ts").to_pylist())
-        # files follow event time (batches must advance the watermark)
-        if ts_max_prev is not None:
-            assert lo >= ts_max_prev
-        ts_max_prev = max(t.column("ts").to_pylist())
-    c = collections.Counter(keys)
-    assert len(c) == m["n_unique"]
-    dup_rows = sum(v - 1 for v in c.values())
-    # file 0 has no dup pool; files 1-7 each carry DUP_RATE dups
-    assert dup_rows == 7 * int(1500 * ps.DUP_RATE)
-    # manifest-gated reuse: second call is a no-op
-    mtime = os.path.getmtime(tmp_path / "backlog" / files[0])
-    assert ps.gen_backlog()["n_unique"] == m["n_unique"]
-    assert os.path.getmtime(tmp_path / "backlog" / files[0]) == mtime
-    # param change invalidates
-    monkeypatch.setattr(ps, "ROWS_PER_FILE", 1000)
-    m2 = ps.gen_backlog()
-    assert m2["n_rows"] == 8 * 1000
-
-
-def test_probe_maintenance_root_gen_pristine_gate(tmp_path, monkeypatch):
-    import os
-    import shutil
-
-    import tools.probe_maintenance as pm
-
-    monkeypatch.setattr(pm, "BASE", str(tmp_path))
-    monkeypatch.setattr(pm, "ROOT", str(tmp_path / "warehouse"))
-    monkeypatch.setattr(pm, "N_PARTS", 3)
-    monkeypatch.setattr(pm, "FILES_PER_PART", 4)
-    monkeypatch.setattr(pm, "ROWS_PER_FILE", 100)
-    pm.gen_root()
-    assert pm._count_files(pm.ROOT) == 12
-    parts = sorted(os.listdir(pm.ROOT))
-    assert parts == ["dt=2026-01-01", "dt=2026-01-02", "dt=2026-01-03"]
-    # reuse: no rewrite when pristine
-    f0 = os.path.join(pm.ROOT, parts[0], "part-00000.parquet")
-    mtime = os.path.getmtime(f0)
-    pm.gen_root()
-    assert os.path.getmtime(f0) == mtime
-    # post-run mutation (a compaction/expire) fails the pristine gate
-    shutil.rmtree(os.path.join(pm.ROOT, parts[2]))
-    pm.gen_root()
-    assert pm._count_files(pm.ROOT) == 12
-
-
-def test_probe_upsert_tick_frame_accounting():
-    """The MERGE probe's re-delivery math: tick 0 is all-fresh; later
-    ticks re-deliver exactly REDELIVER_RATE of rows as previous-day
-    keys with previous-day timestamps, so warehouse-unique counting
-    (sum of n_new) is exact."""
-    import numpy as np
-
-    import tools.probe_upsert as pu
-
-    rng = np.random.default_rng(0)
-    k0, ts0, _v0, n0 = pu._tick_frame(0, rng)
-    assert n0 == len(k0) == pu.ROWS_PER_FILE
-    assert len(set(k0.tolist())) == pu.ROWS_PER_FILE  # all fresh
-    k1, ts1, _v1, n1 = pu._tick_frame(1, rng)
-    n_dup = int(pu.ROWS_PER_FILE * pu.REDELIVER_RATE)
-    assert n1 == pu.ROWS_PER_FILE - n_dup
-    dup_mask = np.isin(k1, k0)
-    assert dup_mask.sum() == n_dup  # every dup is a tick-0 key
-    day = 86_400
-    # re-delivered rows carry PREVIOUS-day timestamps (so the
-    # partitioned variant's read-back must include that partition)
-    assert ((ts1[dup_mask] - pu.T0_EPOCH) // day == 0).all()
-    assert ((ts1[~dup_mask] - pu.T0_EPOCH) // day == 1).all()
-
-
-def test_probe_joins_generators(tmp_path, monkeypatch):
-    """Structural pins for the temporal-join probe corpus (r17
-    precedent: probe generators get toy-scale tests): SPP tiles must
-    tile time exactly (contiguous, inclusive-end, no double-match
-    possible), windows are one 1-day interval per uid, fact timestamps
-    stay inside the declared range, and the manifest gate reuses a
-    matching corpus instead of regenerating."""
-    import pyarrow.dataset as ds
-
-    import tools.probe_joins as pj
-
-    monkeypatch.setattr(pj, "BASE", str(tmp_path))
-    d = pj.gen_dir(1)
-    s = pj._sizes(1)
-
-    tiles = ds.dataset(f"{d}/tiles").to_table().to_pandas()
-    assert len(tiles) == 4 * s["n_tiles_per_zone"]
-    t0 = pj.T0_US
-    for zone, g in tiles.groupby("zone"):
-        g = g.sort_values("i_start")
-        starts = g["i_start"].astype("int64").to_numpy()
-        ends = g["i_end"].astype("int64").to_numpy()
-        assert starts[0] == t0
-        assert (ends - starts == 900_000_000 - 1).all()  # inclusive end
-        assert (starts[1:] == ends[:-1] + 1).all()  # contiguous, no overlap
-        assert ends[-1] == t0 + s["range_sec"] * 1_000_000 - 1  # full cover
-    assert set(tiles["zone"]) == set(pj.ZONES)
-
-    win = ds.dataset(f"{d}/windows").to_table().to_pandas()
-    assert len(win) == s["n_uids"]
-    assert sorted(win["uid"]) == list(range(s["n_uids"]))  # one per uid
-    dur = win["w_end"].astype("int64") - win["w_start"].astype("int64")
-    assert (dur == 86_400_000_000).all()
-
-    left = ds.dataset(f"{d}/left").to_table().to_pandas()
-    assert len(left) == s["n_left"]
-    ts = left["ts"].astype("int64")
-    assert ts.min() >= t0 and ts.max() < t0 + s["range_sec"] * 1_000_000
-    assert left["uid"].between(0, s["n_uids"] - 1).all()
-    assert set(left["zone"]) == set(pj.ZONES)
-
-    # manifest gate: second call must REUSE (mtime unchanged), a
-    # version bump must regenerate
-    import os
-
-    probe_file = os.path.join(d, "left", "part0000.parquet")
-    mtime = os.path.getmtime(probe_file)
-    assert pj.gen_dir(1) == d
-    assert os.path.getmtime(probe_file) == mtime
-    monkeypatch.setattr(pj, "_GEN_VERSION", pj._GEN_VERSION + 1)
-    pj.gen_dir(1)
-    assert os.path.getmtime(probe_file) != mtime
-
-
 def test_oracle_check_puts_its_own_checkout_first(tmp_path, monkeypatch):
     """The tools import the engine from the checkout they live in, so a
     check or benchmark run from a copy of the repository measures that
     copy, not another checkout."""
     import importlib.util
     import shutil
-    from pathlib import Path
 
-    real_root = Path(__file__).resolve().parent.parent
     copy_root = tmp_path / "checkout"
     (copy_root / "tools").mkdir(parents=True)
-    shutil.copy(real_root / "tools" / "oracle_check.py", copy_root / "tools")
+    shutil.copy(REPO / "tools" / "oracle_check.py", copy_root / "tools")
     monkeypatch.setattr(sys, "path", list(sys.path))
     spec = importlib.util.spec_from_file_location(
         "oracle_check_copy", copy_root / "tools" / "oracle_check.py"
     )
     spec.loader.exec_module(importlib.util.module_from_spec(spec))
     assert sys.path[0] == str(copy_root)
-    assert sys.path[0] != str(real_root)
+    assert sys.path[0] != str(REPO)

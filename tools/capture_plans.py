@@ -1,6 +1,6 @@
 """Capture `.explain("formatted")` output per registry query into
-plans/<round>/<query>_<tag>.txt (the optimization-round evidence files:
-the judge checks plan claims against these).
+plans/<round>/<query>_<tag>.txt (git-ignored): capture a ``before`` and
+an ``after`` tag and diff them to check that a change left plans alone.
 
 Usage:
   python tools/capture_plans.py --tag before [--only a,b] [--round r19]
